@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Value-normalization transforms (SURVEY.md §2.2 F1, F5, F7, F8).
   * All literal-map lookups constant-fold into codegen — at cluster
   * scale they are map-side with zero shuffle; the year clamp is the
-  * one explicitly two-phase op (scan-reduce for the min, then a pure
+  * one data-dependent op (an aggregate for the floor, then a pure
   * expression — SURVEY.md §7.4).
   */
 object Normalize {
@@ -102,10 +102,12 @@ object Normalize {
   def lowercaseCountry(c: Column): Column =
     when(c.isNull, lit("None")).otherwise(lower(trim(c)))
 
-  /** F8 — data-dependent year clamp, phase 2 (pure expression).
-    * Phase 1 (the scan-reduce for `minYear`) lives in
-    * [[BoatPipeline.minPlausibleYear]]. Keep y iff
-    * minYear ≤ y ≤ currentYear, else minYear − 10. */
+  /** F8 — data-dependent year clamp, as a pure expression over the
+    * year floor `minYear`, the least plausible year of the input.
+    * [[BoatPipeline.clean]] finds it with
+    * [[BoatPipeline.minPlausibleYear]]; [[BoatPipeline.run]] takes it
+    * from the per-country aggregate that also yields the summary. Keep
+    * y iff minYear ≤ y ≤ currentYear, else minYear − 10. */
   def clampYear(y: Column, minYear: Long, currentYear: Int): Column =
     when(y.between(minYear, currentYear), y).otherwise(lit(minYear - 10))
 }

@@ -42,11 +42,26 @@ object Validate {
       throw new ValidationException(s"missing columns: ${missing.toSeq.sorted.mkString(", ")}")
   }
 
+  /** One violation-count aggregate per check, named after its rule —
+    * shared by the aggregate pass ([[report]]) and the observed write
+    * in [[BoatPipeline.run]]. */
+  def violationCounts(checks: Seq[(String, Column)]): Seq[Column] =
+    checks.map { case (name, bad) => count(when(bad, 1)).as(name) }
+
+  /** V3's verdict over (rule, violations) pairs: throws, naming every
+    * violated rule in rule order, if any count is above 0. */
+  def throwIfViolated(counts: Seq[(String, Long)]): Unit = {
+    val bad = counts.filter(_._2 > 0).sortBy(_._1)
+    if (bad.nonEmpty)
+      throw new ValidationException(
+        bad.map { case (rule, n) => s"$rule=$n" }.mkString("validation failed: ", ", ", ""))
+  }
+
   /** Violation report: one row per rule with its violation count —
     * a single conditional-count aggregate pass, unpivoted with
     * stack(). */
   def report(df: DataFrame, checks: Seq[(String, Column)]): DataFrame = {
-    val aggs = checks.map { case (name, bad) => count(when(bad, 1)).as(name) }
+    val aggs = violationCounts(checks)
     val stackArgs = checks.map { case (name, _) => s"'$name', `$name`" }.mkString(", ")
     df.agg(aggs.head, aggs.tail: _*)
       .selectExpr(s"stack(${checks.size}, $stackArgs) AS (rule, violations)")
@@ -54,10 +69,6 @@ object Validate {
   }
 
   /** V3 — fail the job if any check has violations. */
-  def validateOrThrow(df: DataFrame, checks: Seq[(String, Column)]): Unit = {
-    val bad = report(df, checks).filter(col("violations") > 0).collect()
-    if (bad.nonEmpty)
-      throw new ValidationException(
-        bad.map(r => s"${r.getString(0)}=${r.getLong(1)}").mkString("validation failed: ", ", ", ""))
-  }
+  def validateOrThrow(df: DataFrame, checks: Seq[(String, Column)]): Unit =
+    throwIfViolated(report(df, checks).collect().map(r => r.getString(0) -> r.getLong(1)).toSeq)
 }

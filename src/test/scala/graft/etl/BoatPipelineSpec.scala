@@ -1,6 +1,11 @@
 package graft.etl
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
+
 import graft.SparkSpec
+import org.apache.spark.graftspec.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 
 /** End-to-end golden test of the boat ETL on the checked-in mini
@@ -118,5 +123,132 @@ class BoatPipelineSpec extends SparkSpec {
     val csv = spark.read.option("header", "true").csv(s"$out/data_summary.csv")
     assert(csv.count() == 13)
     assert(csv.columns.toSeq == Seq("country", "avg_price", "count"))
+  }
+
+  /** A copy of the mini fixture with `edit` applied, under a fresh
+    * temp directory. */
+  private def fixtureWith(edit: String => String): String = {
+    val text = new String(Files.readAllBytes(Paths.get(fixture)), UTF_8)
+    val edited = edit(text)
+    assert(edited != text)
+    val p = Files.createTempDirectory("boat_in").resolve("boats.csv")
+    Files.write(p, edited.getBytes(UTF_8))
+    p.toString
+  }
+
+  /** Every file under `dir` (relative path → size); empty when `dir`
+    * does not exist. */
+  private def listing(dir: String): Map[String, Long] = {
+    val root = Paths.get(dir)
+    if (!Files.exists(root)) Map.empty
+    else {
+      val files = Files.walk(root)
+      try files.filter(Files.isRegularFile(_)).toArray.toSeq.map { f =>
+        val p = f.asInstanceOf[Path]
+        root.relativize(p).toString -> Files.size(p)
+      }.toMap
+      finally files.close()
+    }
+  }
+
+  /** `f`'s result and the number of Spark jobs it submitted. */
+  private def countingJobs[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.job.tag"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(key) == tag) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, tag)
+    try {
+      val r = f
+      ListenerBusDrain.drain(sc)
+      (r, jobs.get)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("run() matches clean + summary, in at most 4 Spark jobs, on both parse paths") {
+    val multiLine = fixtureWith(_.replace("Burton Waters, Burton Waters", "Burton Waters,\nBurton Waters"))
+    for ((path, in) <- Seq("single-line" -> fixture, "multi-line" -> multiLine)) {
+      val out = Files.createTempDirectory("boat_out").toString
+      val (returned, jobs) = countingJobs(BoatPipeline.run(spark, in, out, currentYear = 2026))
+      info(s"$path input: $jobs Spark jobs")
+      assert(jobs > 0 && jobs <= 4, s"run() on the $path input submitted $jobs Spark jobs")
+      val cleanedIn = BoatPipeline.clean(Parse.load(spark, in), currentYear = 2026)
+      val parquet = spark.read.parquet(s"$out/data.parquet")
+      assert(parquet.columns.toSeq == cleanedIn.columns.toSeq)
+      assert(parquet.exceptAll(cleanedIn).isEmpty && cleanedIn.exceptAll(parquet).isEmpty)
+      val expected = BoatPipeline.summary(cleanedIn).collect().toSeq
+      val csv = spark.read.option("header", "true")
+        .schema("country STRING, avg_price DOUBLE, count LONG")
+        .csv(s"$out/data_summary.csv").collect().toSeq
+      assert(csv == expected)
+      assert(returned.collect().toSeq == expected)
+      assert(listing(out).keys.forall(k => k.startsWith("data.parquet") || k.startsWith("data_summary.csv")))
+    }
+    // the multi-line copy did take the multi-line path: one record
+    // spans two physical lines, and the city keeps the newline
+    val cities = BoatPipeline.clean(Parse.load(spark, multiLine), currentYear = 2026)
+      .select("City").collect().map(_.getString(0))
+    assert(cities.exists(c => c != null && c.contains("\n")))
+  }
+
+  test("run() fails fast on a validation error and leaves outDir as it was") {
+    val dirty = fixtureWith(_.replaceFirst(",GRP,", ",Papier-mache,"))
+    val fresh = Files.createTempDirectory("boat_out").toString
+    val e = intercept[Validate.ValidationException] {
+      BoatPipeline.run(spark, dirty, fresh, currentYear = 2026)
+    }
+    assert(e.getMessage.contains("material_domain=1"), e.getMessage)
+    assert(listing(fresh).isEmpty, listing(fresh))
+    // the same error text as the aggregate gate
+    val viaGate = intercept[Validate.ValidationException] {
+      Validate.validateOrThrow(BoatPipeline.clean(Parse.load(spark, dirty), currentYear = 2026),
+        Validate.boatChecks(2026))
+    }
+    assert(viaGate.getMessage == e.getMessage)
+
+    // a failing run over a good run's outputs leaves them untouched
+    val kept = Files.createTempDirectory("boat_out").toString
+    BoatPipeline.run(spark, fixture, kept, currentYear = 2026)
+    BoatPipeline.run(spark, fixture, kept, currentYear = 2026) // overwrites cleanly
+    val before = listing(kept)
+    assert(before.keys.exists(_.startsWith("data.parquet/")))
+    assert(before.keys.exists(_.startsWith("data_summary.csv/")))
+    intercept[Validate.ValidationException] {
+      BoatPipeline.run(spark, dirty, kept, currentYear = 2026)
+    }
+    assert(listing(kept) == before)
+  }
+
+  test("no plausible Year Built: clean and run fail with a ValidationException") {
+    val in = Files.createTempDirectory("boat_in").resolve("years.csv")
+    Files.write(in, (Parse.header + "\n" +
+      "EUR 3490,Sport Boat,Terhi,new boat from stock,0,4.0,1.5,GRP,Germany | Bremen,75\n" +
+      "EUR 2500,Rowboat,Hanse,Used boat,,4.0,1.5,Wood,Germany | Bremen,20\n").getBytes(UTF_8))
+    val viaClean = intercept[Validate.ValidationException] {
+      BoatPipeline.clean(Parse.load(spark, in.toString), currentYear = 2026)
+    }
+    assert(viaClean.getMessage.contains("year floor"), viaClean.getMessage)
+    val out = Files.createTempDirectory("boat_out").toString
+    val viaRun = intercept[Validate.ValidationException] {
+      BoatPipeline.run(spark, in.toString, out, currentYear = 2026)
+    }
+    assert(viaRun.getMessage == viaClean.getMessage)
+    assert(listing(out).isEmpty, listing(out))
+  }
+
+  test("run() writes the summary under summaryDir when given") {
+    val out = Files.createTempDirectory("boat_out").toString
+    val sum = Files.createTempDirectory("boat_sum").toString
+    BoatPipeline.run(spark, fixture, out, currentYear = 2026, summaryDir = Some(sum))
+    assert(listing(out).keys.forall(_.startsWith("data.parquet/")))
+    assert(spark.read.option("header", "true").csv(s"$sum/data_summary.csv").count() == 13)
   }
 }
